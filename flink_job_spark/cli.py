@@ -8,7 +8,9 @@
   --order-by col[,col2...]              per-table ordering/cutoff key override (mis:231-242)
   --src-system-code                     envelope stamp (mis:1115)
   --fail-on-consistency-error           mis:119-121
-  --batch-size                          tables per progress batch (mis:84, 117)
+  --batch-size                          tables loaded concurrently as one batch; a
+                                        strict audit failure aborts at the batch
+                                        boundary (mis:84, 117, 189-198)
   --fetch-size                          JDBC cursor page size (mis:83, 116)
   --parallelism                         parallel key-range read partitions (mis:81, 115)
   --jdbc-user / --jdbc-pass             source credentials (mis:112-113)
@@ -118,7 +120,8 @@ def main(argv: list[str] | None = None) -> int:
                    help="comma list parallel to --tables; blank entries auto-detect")
     p.add_argument("--src-system-code", default="mis")
     p.add_argument("--fail-on-consistency-error", action="store_true")
-    p.add_argument("--batch-size", type=int, default=5)       # mis:84, 117
+    p.add_argument("--batch-size", type=int, default=5,      # mis:84, 117
+                   help="tables loaded concurrently as one batch")
     p.add_argument("--fetch-size", type=int, default=50_000)  # mis:83, 116
     p.add_argument("--parallelism", type=int, default=2)      # mis:81, 115
     p.add_argument("--jdbc-user", default=None)               # mis:112
@@ -188,8 +191,9 @@ def main(argv: list[str] | None = None) -> int:
         try:
             results = ingest_tables(spark, jobs[start:start + args.batch_size], cfg)
         except ConsistencyError as e:
-            # --fail-on-consistency-error aborts the whole job, like the
-            # reference's rethrown ConsistencyCheckException (mis:365-368)
+            # --fail-on-consistency-error: the failing table's batch has
+            # finished; no later batch starts, like the reference's rethrown
+            # ConsistencyCheckException (mis:365-368)
             rep = e.report
             print(f"ABORT {e.table}: consistency check failed "
                   f"read={rep.source_count} written={rep.target_count} "

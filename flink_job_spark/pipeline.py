@@ -14,7 +14,8 @@ Per table:
 6. re-read the target and run the COUNT+mismatch audit (mis:1385-1411)
 
 Failure isolation: per-table try/except, like the reference's skip-on-failure
-loop (mis:207-224, 309-359).
+loop (mis:207-224, 309-359). ``ingest_tables`` runs the tables of one batch
+concurrently, each on its own thread of the shared session.
 """
 
 from __future__ import annotations
@@ -56,7 +57,8 @@ class SchemaDriftError(RuntimeError):
 
 class ConsistencyError(RuntimeError):
     """Raised when the post-load audit fails and fail_on_consistency_error is
-    set. Escapes the per-table failure isolation and aborts the whole batch,
+    set. Escapes the per-table failure isolation: the rest of the batch
+    finishes, then ``ingest_tables`` re-raises it and no later batch starts,
     like the reference's rethrown ConsistencyCheckException (mis:365-368).
     Carries the failing AuditReport so the caller can print the numbers."""
 
@@ -211,8 +213,9 @@ def snapshot_ingest(
             h1=names["row_hash"], h2=names["row_hash_iceberg"])
         if not report.ok:
             if cfg.fail_on_consistency_error:
-                # escapes the blanket isolation below and aborts the batch,
-                # like the reference's rethrow (mis:365-368)
+                # escapes the blanket isolation below; ingest_tables
+                # re-raises it once the batch is done, like the reference's
+                # rethrow (mis:365-368)
                 raise ConsistencyError(table, report)
             log.error("consistency check failed for %s: delta=%d hash_mismatches=%d",
                       table, report.delta, report.hash_mismatches)
@@ -229,18 +232,39 @@ def ingest_tables(
     tables: list[tuple],  # (df, name, target_path, order_col[, infos])
     config: IngestConfig | None = None,
 ) -> list[IngestResult]:
-    """Multi-table loop with per-table failure isolation and running totals
-    (the reference's batch loop, mis:189-198, 299-359). A 5th tuple element
-    carries per-table ColumnInfo metadata (live JDBC sources)."""
-    import dataclasses
+    """Load one batch of tables concurrently on the shared session, with
+    per-table failure isolation and running totals (the reference's batch
+    loop, mis:189-198, 299-359: one StatementSet per batch, run as one job).
+    A 5th tuple element carries per-table ColumnInfo metadata (live JDBC
+    sources).
 
-    results = []
-    for item in tables:
+    Each table is a chain of small Spark jobs that alone leave most cores
+    idle, so every table gets its own thread; Spark's scheduler interleaves
+    their jobs. Results come back in input order. Under
+    ``fail_on_consistency_error`` every table of the batch still finishes,
+    then the first ConsistencyError in input order is re-raised — the abort
+    happens at the batch boundary, like the reference's (mis:365-368)."""
+    import dataclasses
+    from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark import inheritable_thread_target
+
+    def ingest_one(item: tuple) -> IngestResult:
         df, name, path, key = item[:4]
         infos = item[4] if len(item) > 4 and item[4] else None
         cfg = (dataclasses.replace(config or IngestConfig(), infos=infos)
                if infos else config)
-        results.append(snapshot_ingest(spark, df, name, path, key, cfg))
+        return snapshot_ingest(spark, df, name, path, key, cfg)
+
+    with ThreadPoolExecutor(max_workers=max(1, len(tables)),
+                            thread_name_prefix="ingest") as pool:
+        # wrap per task: each thread gets its own copy of the caller's local
+        # properties (job group, scheduler pool), captured here
+        futures = [pool.submit(inheritable_thread_target(spark)(ingest_one), item)
+                   for item in tables]
+    # the pool has joined: every table is done; result() re-raises a table's
+    # ConsistencyError, so the first one in input order escapes
+    results = [f.result() for f in futures]
     total_read = sum(r.report.source_count for r in results if r.report)
     total_written = sum(r.report.target_count for r in results if r.report)
     log.info("ingest totals: rows_read=%d rows_written=%d delta=%d failures=%d",

@@ -6,7 +6,10 @@ read as parallel tasks, so the faithful equivalent is task/stage-level
 progress from the StatusTracker plus exact observed row counts from an
 ``Observation`` attached to the write plan (no second scan). Cancellation
 maps to job-group cancel (``interruptOnCancel``), the analog of the
-reference's ``cancel()`` flag on the source."""
+reference's ``cancel()`` flag on the source.
+
+Job groups are thread-local, so reporters on concurrent threads (one per
+table of an ingest batch) each watch only their own group's stages."""
 
 from __future__ import annotations
 
@@ -16,6 +19,10 @@ import threading
 from pyspark.sql import SparkSession
 
 log = logging.getLogger(__name__)
+
+# the thread-local properties setJobGroup writes; __exit__ restores them
+_GROUP_PROPS = ("spark.jobGroup.id", "spark.job.description",
+                "spark.job.interruptOnCancel")
 
 
 class ProgressReporter:
@@ -35,9 +42,11 @@ class ProgressReporter:
         self.interval = interval
         self._stop = threading.Event()
         self._thread: threading.Thread | None = None
+        self._prev: dict[str, str | None] = {}
         self.events: list[str] = []  # observable log trail (also for tests)
 
     def __enter__(self) -> "ProgressReporter":
+        self._prev = {k: self._sc.getLocalProperty(k) for k in _GROUP_PROPS}
         self._sc.setJobGroup(self.job_group, self.description,
                              interruptOnCancel=True)
         self._thread = threading.Thread(target=self._poll, daemon=True)
@@ -48,7 +57,8 @@ class ProgressReporter:
         self._stop.set()
         if self._thread is not None:
             self._thread.join(timeout=5)
-        self._sc.setJobGroup("", "")
+        for k, v in self._prev.items():  # None removes the property
+            self._sc.setLocalProperty(k, v)
 
     def cancel(self) -> None:
         """Abort everything running under this job group (mis:1215-1218)."""
@@ -59,7 +69,11 @@ class ProgressReporter:
         seen: dict[int, int] = {}
         while not self._stop.is_set():
             try:
-                for sid in tracker.getActiveStageIds():
+                active = set(tracker.getActiveStageIds())
+                mine = {sid for jid in tracker.getJobIdsForGroup(self.job_group)
+                        if (job := tracker.getJobInfo(jid)) is not None
+                        for sid in job.stageIds}
+                for sid in sorted(active & mine):
                     info = tracker.getStageInfo(sid)
                     if info is None or info.numTasks == 0:
                         continue

@@ -1035,9 +1035,11 @@ def q_entity_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The 1-deletion neighborhood is COMPLETE only for lev <= 1; a silent
     # bump of ER_NAME_MAX_DIST would drop pairs instead of degrading
     # gracefully like the old self-join did (ADVICE r9) — fail loudly.
-    assert ER_NAME_MAX_DIST == 1, (
-        "deletion-neighborhood candidate keys assume lev <= 1; raising "
-        "ER_NAME_MAX_DIST requires deeper deletion keys")
+    # (a raise, not an assert: python -O strips asserts)
+    if ER_NAME_MAX_DIST != 1:
+        raise ValueError(
+            "deletion-neighborhood candidate keys assume lev <= 1; raising "
+            "ER_NAME_MAX_DIST requires deeper deletion keys")
     # deletion-neighborhood keys: the name itself + every 1-char deletion
     del_keys = F.array_union(
         F.array(F.col("c_name")),

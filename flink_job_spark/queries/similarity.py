@@ -351,7 +351,17 @@ def q_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = _vecs(spark, sf_dir)
     cents = _collect_low_vecs(e, IVF_CENTROIDS)
     return _ivf_probe_plan(spark, e, cents, IVF_NPROBE,
-                           qrows=[r for r in cents if r[0] < N_QUERY_VECS])
+                           qrows=_query_prefix(cents, IVF_CENTROIDS, "IVF_CENTROIDS"))
+
+
+def _query_prefix(rows: list, sample: int, sample_name: str) -> list:
+    """The query vectors (vec_id < N_QUERY_VECS) taken from a collected
+    low-id sample of ``sample`` rows. A query set larger than the sample
+    would be silently truncated, so that configuration fails loudly."""
+    if N_QUERY_VECS > sample:
+        raise ValueError(f"N_QUERY_VECS={N_QUERY_VECS} exceeds {sample_name}={sample}: "
+                         "the query vectors are read from that low-id sample")
+    return [r for r in rows if int(r[0]) < N_QUERY_VECS]
 
 
 def _pydot(a, b):
@@ -572,7 +582,7 @@ def q_ann_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     cents = kmeans_lite_centroids(spark, e, IVF_CENTROIDS, KMEANS_ITERS,
                                   init=low)
     return _ivf_probe_plan(spark, e, cents, IVF_KMEANS_NPROBE,
-                           qrows=[r for r in low if r[0] < N_QUERY_VECS])
+                           qrows=_query_prefix(low, IVF_CENTROIDS, "IVF_CENTROIDS"))
 
 
 # --- q_embedding_quantize (int8 symmetric quantization) ----------------------------
@@ -1170,7 +1180,7 @@ def q_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     enc = pq_encode(e, books)
 
     # driver-side LUTs for the tiny query set, same IEEE fold as the oracle
-    qrows = [r for r in low if int(r["vec_id"]) < N_QUERY_VECS]
+    qrows = _query_prefix(low, PQ_CODES, "PQ_CODES")
     probes = []
     for qr in qrows:
         qv = [float(x) for x in qr["v"]]

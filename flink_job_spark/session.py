@@ -12,6 +12,24 @@ import os
 
 from pyspark.sql import SparkSession
 
+_MAX_DEFAULT_DRIVER_GB = 24
+
+
+def default_driver_memory() -> str:
+    """``spark.driver.memory`` when ``SPARK_GRAFT_DRIVER_MEM`` is unset: half
+    of the host's physical memory, capped at 24g. local mode runs every task
+    in the driver JVM, so a heap larger than the host gets the JVM OOM-killed
+    instead of spilling."""
+    try:
+        with open("/proc/meminfo") as fh:
+            for line in fh:
+                if line.startswith("MemTotal:"):
+                    half_gb = int(line.split()[1]) // (2 * 1024 * 1024)
+                    return f"{max(1, min(half_gb, _MAX_DEFAULT_DRIVER_GB))}g"
+    except OSError:  # no procfs (non-Linux host): keep the fixed default
+        pass
+    return f"{_MAX_DEFAULT_DRIVER_GB}g"
+
 
 def get_spark(app_name: str = "flink_job_spark", cpus: int | None = None) -> SparkSession:
     if cpus is None:
@@ -26,8 +44,9 @@ def get_spark(app_name: str = "flink_job_spark", cpus: int | None = None) -> Spa
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # local[32] runs everything in the driver JVM; 8g showed multi-second
-        # GC spikes on random queries at sf0.1 (the host has 128 GiB)
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        # GC spikes on random queries at sf0.1 on a 128 GiB host
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory())
         .config("spark.ui.enabled", "false")
         # the driver testdata stores `events.ts` as parquet TIMESTAMP(NANOS)
         # which Spark only reads via this legacy long mapping

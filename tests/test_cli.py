@@ -78,6 +78,22 @@ def test_cli_fail_on_consistency_error_aborts(spark, sf_dir, tmp_path, capsys):
     assert "ABORT nation" in capsys.readouterr().err
 
 
+def test_cli_consistency_abort_stops_later_batches(spark, sf_dir, tmp_path, capsys):
+    """--batch-size is the unit of abort: with one table per batch, a strict
+    audit failure in the first batch exits 2 before the second batch starts,
+    so its target is never written (mis:189-198, 365-368)."""
+    import os
+
+    tgt = str(tmp_path / "out")
+    common = ["--source-dir", sf_dir, "--target-dir", tgt, "--mode", "append"]
+    assert main(["--tables", "nation"] + common) == 0
+    rc = main(["--tables", "nation,region", "--batch-size", "1",
+               "--fail-on-consistency-error"] + common)
+    assert rc == 2
+    assert "ABORT nation" in capsys.readouterr().err
+    assert not os.path.exists(f"{tgt}/region")
+
+
 def test_cli_ingest_roundtrip(spark, sf_dir, tmp_path):
     tgt = str(tmp_path / "out")
     rc = main([

@@ -232,3 +232,18 @@ def test_minhash_lsh_finds_cjk_near_dups(spark):
         "distinct ja docs must not pair"
     assert not any(d1 in (1, 2) and d2 in (3, 4) for d1, d2 in pairs), \
         "cross-language pairs must not appear"
+
+
+def test_entity_resolution_rejects_deeper_name_distance(spark, sf_dir, monkeypatch):
+    """The 1-deletion candidate keys are complete only for lev <= 1; a larger
+    ER_NAME_MAX_DIST must raise (also under python -O), not drop pairs."""
+    import pytest
+
+    from flink_job_spark.queries import all_queries, dedup
+
+    monkeypatch.setattr(dedup, "ER_NAME_MAX_DIST", 2)
+    try:
+        with pytest.raises(ValueError, match="ER_NAME_MAX_DIST"):
+            all_queries()["q_entity_resolution"].fn(spark, sf_dir)
+    finally:
+        spark.catalog.clearCache()

@@ -93,3 +93,22 @@ def test_pq_codes_are_compact_and_in_range(spark, sf_dir):
     spark.catalog.clearCache()
     assert stats["mn"] == stats["mx"] == PQ_M
     assert 0 <= stats["cmin"] and stats["cmax"] < PQ_CODES
+
+
+def test_query_set_larger_than_the_shared_sample_fails_loudly(spark, sf_dir, monkeypatch):
+    """The ANN keys read their query vectors out of the collected low-id
+    centroid / codebook sample; a query set larger than that sample must
+    raise instead of being silently truncated."""
+    import pytest
+
+    from flink_job_spark.queries import similarity
+
+    monkeypatch.setattr(similarity, "N_QUERY_VECS", similarity.IVF_CENTROIDS + 1)
+    with pytest.raises(ValueError, match="IVF_CENTROIDS"):
+        all_queries()["q_ann_ivf_topk"].fn(spark, sf_dir)
+    rows = [(i,) for i in range(similarity.PQ_CODES)]
+    monkeypatch.setattr(similarity, "N_QUERY_VECS", similarity.PQ_CODES + 1)
+    with pytest.raises(ValueError, match="PQ_CODES"):
+        similarity._query_prefix(rows, similarity.PQ_CODES, "PQ_CODES")
+    monkeypatch.setattr(similarity, "N_QUERY_VECS", 3)
+    assert similarity._query_prefix(rows, similarity.PQ_CODES, "PQ_CODES") == rows[:3]

@@ -7,6 +7,7 @@ import datetime as dt
 import pytest
 from pyspark.sql import functions as F
 
+from flink_job_spark.operators.audit import run_consistency_check
 from flink_job_spark.operators.snapshot import cutoff_predicate
 from flink_job_spark.pipeline import (
     ConsistencyError,
@@ -61,9 +62,9 @@ def test_empty_table_contradiction_cutoff(spark, sf_dir, tmp_path):
 
 def test_fail_on_consistency_error_aborts(spark, sf_dir, tmp_path):
     """With the flag set, a failed audit raises ConsistencyError through the
-    per-table isolation and stops the batch (the reference rethrows
-    ConsistencyCheckException and aborts, mis:365-368). Without the flag the
-    same failure is reported in the result, not raised."""
+    per-table isolation (the reference rethrows ConsistencyCheckException
+    and aborts, mis:365-368). Without the flag the same failure is reported
+    in the result, not raised."""
     nat = load_table(spark, sf_dir, "nation")
     path = str(tmp_path / "n")
     strict = IngestConfig(mode="append", load_dttm=dt.datetime(2026, 1, 1),
@@ -75,23 +76,89 @@ def test_fail_on_consistency_error_aborts(spark, sf_dir, tmp_path):
     assert ei.value.table == "nation"
     assert ei.value.report is not None and ei.value.report.delta > 0
 
-    # the error escapes ingest_tables too: the loop aborts before later tables
+    # the error escapes ingest_tables too, once the whole batch is done: its
+    # batch-mate region still loads (the batch is the unit of abort)
     reg = load_table(spark, sf_dir, "region")
-    with pytest.raises(ConsistencyError):
+    reg_path = str(tmp_path / "r")
+    with pytest.raises(ConsistencyError) as ei:
         ingest_tables(spark, [
             (nat, "nation", path, "n_nationkey"),
-            (reg, "region", str(tmp_path / "r"), "r_regionkey"),
+            (reg, "region", reg_path, "r_regionkey"),
         ], strict)
+    assert ei.value.table == "nation"
+    landed = spark.read.parquet(reg_path)
+    assert landed.count() == reg.count()  # landed once
+    cutoff = reg.agg(F.max("r_regionkey")).first()[0]
+    assert run_consistency_check("region", reg.count(), landed,
+                                 cutoff_predicate("r_regionkey", cutoff)).ok
 
-    # without the flag: reported, isolated, loop continues
+    # without the flag: reported, isolated, batch-mates unaffected
     lax = IngestConfig(mode="append", load_dttm=dt.datetime(2026, 1, 1))
     results = ingest_tables(spark, [
         (nat, "nation", path, "n_nationkey"),
-        (reg, "region", str(tmp_path / "r"), "r_regionkey"),
+        (reg, "region", str(tmp_path / "r2"), "r_regionkey"),
     ], lax)
     assert results[0].error is None and not results[0].ok
     assert results[0].report is not None and results[0].report.delta > 0
     assert results[1].ok
+
+
+def _slow(seconds):
+    def run(batches):
+        import time
+        for pdf in batches:
+            time.sleep(seconds)
+            yield pdf
+    return run
+
+
+def test_ingest_tables_results_in_input_order(spark, sf_dir, tmp_path):
+    """A batch runs concurrently, yet results come back in input order: the
+    slow first table finishes last. Worker threads inherit the caller's job
+    group, so every job of the batch is attributable to it."""
+    nat = load_table(spark, sf_dir, "nation")
+    slow_nat = nat.repartition(2).mapInPandas(_slow(1.0), nat.schema)
+    reg = load_table(spark, sf_dir, "region")
+    sc = spark.sparkContext
+    sc.setJobGroup("t_batch_order", "ingest batch")
+    try:
+        results = ingest_tables(spark, [
+            (slow_nat, "slow_nation", str(tmp_path / "sn"), "n_nationkey"),
+            (reg, "region", str(tmp_path / "r"), "r_regionkey"),
+            (nat, "nation", str(tmp_path / "n"), "n_nationkey"),
+        ], IngestConfig(mode="replace", load_dttm=dt.datetime(2026, 1, 1)))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert [r.table for r in results] == ["slow_nation", "region", "nation"]
+    assert all(r.ok for r in results)
+    assert [r.report.source_count for r in results] == [25, 5, 25]
+    assert sc.statusTracker().getJobIdsForGroup("t_batch_order")
+
+
+def test_ingest_tables_isolates_a_failing_source(spark, sf_dir, tmp_path):
+    """A table whose source raises mid-batch yields an error result; its
+    batch-mates, running at the same time, still land and audit ok."""
+    def boom(batches):
+        import time
+        for _ in batches:
+            time.sleep(0.3)
+            raise RuntimeError("source connection lost")
+        yield from ()
+
+    nat = load_table(spark, sf_dir, "nation")
+    reg = load_table(spark, sf_dir, "region")
+    bad = nat.mapInPandas(boom, nat.schema)
+    results = ingest_tables(spark, [
+        (reg, "region", str(tmp_path / "r"), "r_regionkey"),
+        (bad, "bad_nation", str(tmp_path / "b"), "n_nationkey"),
+        (nat, "nation", str(tmp_path / "n"), "n_nationkey"),
+    ], IngestConfig(mode="replace", load_dttm=dt.datetime(2026, 1, 1)))
+    assert [r.table for r in results] == ["region", "bad_nation", "nation"]
+    assert results[1].error is not None and "source connection lost" in results[1].error
+    assert results[1].report is None
+    assert results[0].ok and results[2].ok
+    assert spark.read.parquet(str(tmp_path / "n")).count() == 25
 
 
 def test_resume_floor_equivalence(spark, sf_dir, tmp_path):

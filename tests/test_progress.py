@@ -59,3 +59,47 @@ def test_progress_reporter_cancel(spark):
                 df.count()
         finally:
             killer.cancel()
+
+
+def test_progress_reporters_on_two_threads_see_only_their_own_stages(spark):
+    """Job groups are thread-local: two reporters watching concurrent jobs on
+    two threads each log only the stages of their own group's jobs."""
+    import re
+    import threading
+
+    def slow(batches):
+        import time
+        for pdf in batches:
+            time.sleep(0.2)
+            yield pdf
+
+    sc = spark.sparkContext
+    reporters: dict[str, ProgressReporter] = {}
+    restored: dict[str, str | None] = {}
+
+    def run(group):
+        sc.setJobGroup(f"{group}_outer", "enclosing group")
+        df = spark.range(0, 800, 1, 8).mapInPandas(slow, "id long")
+        with ProgressReporter(spark, group, interval=0.02) as rep:
+            assert df.count() == 800
+        reporters[group] = rep
+        restored[group] = sc.getLocalProperty("spark.jobGroup.id")
+
+    threads = [threading.Thread(target=run, args=(g,)) for g in ("t_two_a", "t_two_b")]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+
+    tracker = sc.statusTracker()
+    logged = {}
+    for group, rep in reporters.items():
+        assert rep.events, f"no progress events for {group}"
+        own = {sid for jid in tracker.getJobIdsForGroup(group)
+               for sid in tracker.getJobInfo(jid).stageIds}
+        logged[group] = {int(m.group(1)) for e in rep.events
+                         if (m := re.match(r"Progress: stage (\d+):", e))}
+        assert logged[group] <= own, (group, logged[group], own)
+    assert not logged["t_two_a"] & logged["t_two_b"]
+    # each reporter restored its own thread's enclosing job group on exit
+    assert restored == {g: f"{g}_outer" for g in reporters}

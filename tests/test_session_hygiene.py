@@ -48,3 +48,19 @@ def test_star_components_rounds_do_not_accumulate_checkpoints(spark, sf_dir):
         f"checkpoint release regressed")
     unpersist_all(spark)
     assert not (persistent_rdd_ids(spark) - before)
+
+
+def test_default_driver_memory_fits_the_host():
+    """local mode runs every task in the driver JVM: the default heap is half
+    the host's physical memory (capped at 24g), so the JVM is not OOM-killed
+    on a host smaller than the heap."""
+    from flink_job_spark.session import default_driver_memory
+
+    mem = default_driver_memory()
+    assert mem.endswith("g")
+    gb = int(mem[:-1])
+    assert 1 <= gb <= 24
+    with open("/proc/meminfo") as fh:
+        total_kb = next(int(line.split()[1]) for line in fh
+                        if line.startswith("MemTotal:"))
+    assert gb * 1024 * 1024 <= max(total_kb // 2, 1024 * 1024)
