@@ -40,6 +40,10 @@ from flink_job_spark.types import ColumnInfo, infos_from_schema, quote_identifie
 
 log = logging.getLogger(__name__)
 
+# parquet codec of the target files; fixed, like the reference's Iceberg
+# table property (mis:907)
+COMPRESSION = "zstd"
+
 
 class SchemaDriftError(RuntimeError):
     """Raised when an append-mode snapshot's schema no longer matches the
@@ -90,7 +94,6 @@ class IngestConfig:
     mode: str = "append"                 # append | replace (mis:114, 261-263)
     src_system_code: str = DEFAULT_SRC_SYSTEM
     fail_on_consistency_error: bool = False  # mis:119-121
-    compression: str = "zstd"            # mis:907
     load_dttm: dt.datetime | None = None  # fixed for deterministic tests
     infos: dict[str, ColumnInfo] = field(default_factory=dict)
     # Iceberg writer branch (mis:886-939): when catalog is set, the target is
@@ -193,7 +196,7 @@ def snapshot_ingest(
                     raise SchemaDriftError(table, *drift)
                 (to_write.write
                     .partitionBy("load_month")
-                    .option("compression", cfg.compression)
+                    .option("compression", COMPRESSION)
                     .mode("overwrite" if cfg.mode == "replace" else "append")
                     .parquet(target_path))
                 if drift:  # evolve: the target now holds two schemas — merge

@@ -1782,6 +1782,15 @@ def q_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 BFS_MAX_HOPS = 3
 BFS_SEED_NATION = 0
+# bfs_levels' lineage-truncation cadence. Each hop's frame references the
+# previous frontier AND the visited union of every earlier frontier, so the
+# logical plan TREE roughly triples per hop (measured on a 64-node chain:
+# 1.5 KB at hop 1, 52 KB at hop 4, 3.9 MB at hop 8). At the shared
+# CC_CHECKPOINT_EVERY=8 a deep traversal ran out of driver heap (7g)
+# rendering the hop-8 checkpoint's plan string (QueryExecution.explainString);
+# every 4 hops caps the tree at ~3^4 hop plans. Above BFS_MAX_HOPS, so
+# q_bfs_reach never checkpoints.
+BFS_CHECKPOINT_EVERY = 4
 
 
 def bfs_levels(edges: DataFrame, seeds: DataFrame,
@@ -1792,15 +1801,14 @@ def bfs_levels(edges: DataFrame, seeds: DataFrame,
     frontier persists because it feeds both the visited union and the
     next expansion.
 
-    Lineage truncation (r5, VERDICT r4 #2): the visited frame gains one
-    union node per hop and the frontier chains a join per hop — the
-    pattern that stalled min-label components past ~15 driver rounds.
-    Every CC_CHECKPOINT_EVERY (8) hops both frames are localCheckpoint-ed
+    Lineage truncation (r5, VERDICT r4 #2): each hop's frame embeds the
+    previous frontier and the visited union of every earlier frontier, so
+    the plan tree roughly triples per hop (see BFS_CHECKPOINT_EVERY).
+    Every BFS_CHECKPOINT_EVERY (4) hops both frames are localCheckpoint-ed
     (eager) and the previous checkpoint's blocks released. At the shipped
     BFS_MAX_HOPS=3 no checkpoint fires (bench plan unchanged); deep
-    traversals via tools/graph_ab.py are covered (A/B at 32 hops in
-    BASELINE.md)."""
-    from flink_job_spark.queries.dedup import CC_CHECKPOINT_EVERY
+    traversals are covered by tests/test_graph_scale.py (33 hops) and
+    tools/graph_ab.py."""
     from flink_job_spark.session import persistent_rdd_ids, unpersist_rdd_ids
 
     spark = seeds.sparkSession
@@ -1831,7 +1839,7 @@ def bfs_levels(edges: DataFrame, seeds: DataFrame,
                   .withColumn("lvl", F.lit(lvl)).persist())
         visited = visited.union(new)
         frontier = new.select("node")
-        if lvl % CC_CHECKPOINT_EVERY == 0 and lvl < max_hops:
+        if lvl % BFS_CHECKPOINT_EVERY == 0 and lvl < max_hops:
             before = persistent_rdd_ids(spark)
             visited = visited.localCheckpoint(eager=True)
             frontier = frontier.localCheckpoint(eager=True)

@@ -13,7 +13,9 @@ the reference sets user, password, encoding, authPlugins, mis:533-537).
 
 from __future__ import annotations
 
+import datetime as dt
 import logging
+from decimal import Decimal
 from typing import Any
 
 from pyspark.sql import SparkSession
@@ -98,6 +100,28 @@ def detect_primary_key(
         return None
 
 
+def _query_row(spark: SparkSession, url: str, sql: str,
+               properties: dict[str, str] | None = None) -> tuple | None:
+    """First row of a scalar query as ``_from_java``-converted values, or
+    None when the query returns no rows."""
+    conn = _connect(spark, url, properties)
+    try:
+        st = conn.createStatement()
+        try:
+            rs = st.executeQuery(sql)
+            try:
+                if not rs.next():
+                    return None
+                n = rs.getMetaData().getColumnCount()
+                return tuple(_from_java(rs.getObject(i)) for i in range(1, n + 1))
+            finally:
+                rs.close()
+        finally:
+            st.close()
+    finally:
+        conn.close()
+
+
 def read_watermark_value(
     spark: SparkSession,
     url: str,
@@ -109,23 +133,9 @@ def read_watermark_value(
     """Freeze the snapshot cutoff: SELECT MAX(order_col) at job start
     (mis:628-650). Runs as one scalar query on the source."""
     q = lambda n: quote_source_identifier(n, quote)  # noqa: E731
-    sql = f"SELECT MAX({q(order_col)}) FROM {q(table)}"
-    conn = _connect(spark, url, properties)
-    try:
-        st = conn.createStatement()
-        try:
-            rs = st.executeQuery(sql)
-            try:
-                if not rs.next():
-                    return None
-                v = rs.getObject(1)
-                return _from_java(v)
-            finally:
-                rs.close()
-        finally:
-            st.close()
-    finally:
-        conn.close()
+    row = _query_row(spark, url, f"SELECT MAX({q(order_col)}) FROM {q(table)}",
+                     properties)
+    return None if row is None else row[0]
 
 
 def read_key_bounds(
@@ -139,43 +149,24 @@ def read_key_bounds(
     """(MIN, MAX) of the order key — the partition bounds for the parallel
     key-range read (the scalable successor of the reference's single cursor)."""
     q = lambda n: quote_source_identifier(n, quote)  # noqa: E731
-    sql = (f"SELECT MIN({q(order_col)}), MAX({q(order_col)}) "
-           f"FROM {q(table)}")
-    conn = _connect(spark, url, properties)
-    try:
-        st = conn.createStatement()
-        try:
-            rs = st.executeQuery(sql)
-            try:
-                if not rs.next():
-                    return None
-                lo, hi = _from_java(rs.getObject(1)), _from_java(rs.getObject(2))
-                if lo is None or hi is None:
-                    return None
-                return lo, hi
-            finally:
-                rs.close()
-        finally:
-            st.close()
-    finally:
-        conn.close()
+    row = _query_row(spark, url, f"SELECT MIN({q(order_col)}), MAX({q(order_col)}) "
+                                 f"FROM {q(table)}", properties)
+    if row is None or row[0] is None or row[1] is None:
+        return None
+    return row
 
 
 def _from_java(v: Any) -> Any:
     """py4j auto-converts primitives; java.sql temporal/decimal objects come
     back as JavaObject — stringify through their canonical toString and let
     the caller's literal renderer handle them."""
-    import datetime as _dt
-    from decimal import Decimal as _Dec
-    if v is None or isinstance(v, (int, float, bool, str, _Dec,
-                                   _dt.datetime, _dt.date, _dt.time)):
+    if v is None or isinstance(v, (int, float, bool, str, Decimal,
+                                   dt.datetime, dt.date, dt.time)):
         return v
     cls = v.getClass().getName()
     if cls == "java.math.BigDecimal":
-        from decimal import Decimal
         return Decimal(v.toString())
     if cls == "java.sql.Timestamp":
-        import datetime as dt
         # keep MICROSECOND precision: truncating to ms ([:23]) shifted a
         # µs-precision cutoff BELOW the max row, silently excluding the rows
         # that defined MAX(order_col) from their own snapshot. toString()
@@ -185,6 +176,5 @@ def _from_java(v: Any) -> Any:
         return dt.datetime.strptime(
             f"{base}.{(frac + '000000')[:6]}", "%Y-%m-%d %H:%M:%S.%f")
     if cls == "java.sql.Date":
-        import datetime as dt
         return dt.date.fromisoformat(v.toString())
     return v.toString()

@@ -36,7 +36,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from flink_job_spark.streaming import with_file_cap
+from flink_job_spark.streaming import drain, file_stream
 from flink_job_spark.streaming.dedup import _classify_batch
 
 WARC_DOC_SCHEMA = T.StructType([
@@ -162,14 +162,5 @@ def stream_crawl_extract(
               .write.mode("overwrite").parquet(bdir))
         extracted.unpersist()
 
-    q = (
-        with_file_cap(spark.readStream.schema(WARC_DOC_SCHEMA),
-                      max_files_per_trigger)
-        .parquet(src_dir)
-        .writeStream
-        .foreachBatch(admit)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(file_stream(spark, src_dir, WARC_DOC_SCHEMA, max_files_per_trigger),
+          admit, checkpoint_dir)

@@ -28,8 +28,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
-from flink_job_spark.streaming import with_file_cap
 from flink_job_spark.functions.text import norm_text
+from flink_job_spark.streaming import drain, file_stream
 
 
 def _classify_batch(batch: DataFrame, seen_keys: DataFrame | None) -> DataFrame:
@@ -109,17 +109,8 @@ def stream_incremental_dedup(
               .write.mode("overwrite").parquet(bdir))
         verdicts.unpersist()
 
-    q = (
-        with_file_cap(spark.readStream.schema(schema),
-                      max_files_per_trigger)
-        .parquet(src_dir)
-        .writeStream
-        .foreachBatch(admit)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(file_stream(spark, src_dir, schema, max_files_per_trigger),
+          admit, checkpoint_dir)
 
 
 # --- streaming quality gate: per-batch declarative expectations ----------------------
@@ -163,14 +154,5 @@ def stream_quality_gate(
                 f"batch {batch_id} failed rules: "
                 + ", ".join(f"{r[1]} ({r[3]}/{r[2]})" for r in bad))
 
-    q = (
-        with_file_cap(spark.readStream.schema(schema),
-                      max_files_per_trigger)
-        .parquet(src_dir)
-        .writeStream
-        .foreachBatch(gate)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(file_stream(spark, src_dir, schema, max_files_per_trigger),
+          gate, checkpoint_dir)

@@ -4,13 +4,19 @@ reference's exactly-once resumable source (SURVEY §2.7, milestone 3).
 The reference implements exactly-once with a checkpointed row-offset
 (`ListState<Long>` snapshot/restore, mis:1019-1059) and 60s EXACTLY_ONCE
 checkpoints (mis:151-160). In Spark the whole mechanism IS the Structured
-Streaming checkpoint: the file-source offset log records which input files are
+Streaming checkpoint: the source's offset log records which input is
 committed; `Trigger.AvailableNow` drains all available input then stops —
 a restartable, exactly-once bounded snapshot, strictly stronger than SKIP-n
 resume (offsets commit atomically with the sink epoch).
 
-The transformation chain reuses the exact batch builders (envelope + dual
-hash) — one definition, two execution modes.
+Two sources share one audited path: a parquet file stream
+(:func:`stream_snapshot_ingest_audited`) and the paged keyed-cursor JDBC
+stand-in (:func:`stream_paged_ingest_audited`). Both stamp the batch
+pipeline's envelope builder (``with_envelope``) and sink-side hash
+(``row_hash_sql_expr``) onto the stream, then drain it through
+``_audited_batch_sink``, which writes each epoch and runs the batch
+pipeline's COUNT + mismatch audit (``run_consistency_check``) on what landed.
+The batch pipeline keeps its own copy of the stamp around its write.
 """
 
 from __future__ import annotations
@@ -22,63 +28,10 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from flink_job_spark.functions.hashing import row_hash_sql_expr
+from flink_job_spark.operators.audit import AuditReport, run_consistency_check
 from flink_job_spark.operators.envelope import tech_column_names, with_envelope
-
-
-def stream_snapshot_source(spark: SparkSession, src_dir: str,
-                           schema: T.StructType,
-                           max_files_per_trigger: int | None = None) -> DataFrame:
-    """File-stream source over a parquet directory (schema required for
-    streaming reads). `max_files_per_trigger` bounds each micro-batch — the
-    ingestion-rate control that plays the role of the reference's
-    backpressure (Flink's network backpressure has no batch analog; bounding
-    the per-epoch input is how Structured Streaming keeps sink pressure and
-    state growth flat). At scale this maps to any streaming source (Kafka
-    `maxOffsetsPerTrigger`, Kinesis) unchanged."""
-    r = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        r = r.option("maxFilesPerTrigger", max_files_per_trigger)
-    return r.parquet(src_dir)
-
-
-def stream_snapshot_ingest(
-    spark: SparkSession,
-    src_dir: str,
-    schema: T.StructType,
-    target_dir: str,
-    checkpoint_dir: str,
-    src_system_code: str = "mis",
-    load_dttm: dt.datetime | None = None,
-    max_files_per_trigger: int | None = None,
-) -> None:
-    """availableNow snapshot: drain current input, envelope + dual-hash it,
-    append to the parquet sink, commit offsets — then stop. Re-running after
-    new files arrive processes ONLY the new files (the resume semantics the
-    reference builds by hand with SKIP-n). With `max_files_per_trigger`,
-    availableNow drains in bounded micro-batches (each committing its own
-    epoch) instead of one giant batch."""
-    src = stream_snapshot_source(spark, src_dir, schema, max_files_per_trigger)
-    src_cols = list(src.columns)
-    enveloped = with_envelope(src, src_system_code,
-                              load_dttm=load_dttm or dt.datetime.now())
-    names = tech_column_names(src_cols)
-    out = (
-        enveloped
-        .withColumn(names["row_hash_iceberg"],
-                    F.expr(row_hash_sql_expr(src.schema, src_cols)))
-        .withColumn("load_month", F.date_format(F.col(names["load_dttm"]), "yyyy-MM"))
-    )
-    q = (
-        out.writeStream
-        .format("parquet")
-        .option("path", target_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .partitionBy("load_month")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+from flink_job_spark.pipeline import ConsistencyError
+from flink_job_spark.streaming import drain, file_stream
 
 
 def stream_snapshot_ingest_audited(
@@ -91,11 +44,16 @@ def stream_snapshot_ingest_audited(
     load_dttm: dt.datetime | None = None,
     fail_on_consistency_error: bool = True,
     row_hash=None,
-):
-    """Streaming ingest with the batch pipeline's COUNT+mismatch gate wired
-    into a ``foreachBatch`` sink: every micro-batch is written AND audited
-    (dual-hash mismatch count, exact per-batch row count) before its offsets
-    commit — the streaming twin of the post-load audit (mis:1264-1331).
+    max_files_per_trigger: int | None = None,
+) -> list[AuditReport]:
+    """Streaming ingest of the parquet files under ``src_dir`` with the
+    batch pipeline's COUNT+mismatch gate wired into a ``foreachBatch`` sink:
+    every micro-batch is written AND audited (dual-hash mismatch count,
+    exact per-batch row count) before its offsets commit — the streaming
+    twin of the post-load audit (mis:1264-1331). Re-running after new files
+    arrive processes ONLY the new files (the resume semantics the reference
+    builds by hand with SKIP-n); ``max_files_per_trigger`` splits the drain
+    into bounded epochs (see :func:`~flink_job_spark.streaming.file_stream`).
 
     With ``fail_on_consistency_error`` a mismatching batch raises
     :class:`~flink_job_spark.pipeline.ConsistencyError` inside foreachBatch,
@@ -107,75 +65,9 @@ def stream_snapshot_ingest_audited(
     ``row_hash`` overrides the source-side hash column (the audit exists
     precisely because the two hash implementations are independent inputs).
     Returns the per-batch :class:`AuditReport` ledger."""
-    from flink_job_spark.operators.audit import AuditReport, hash_mismatch_flag
-    from flink_job_spark.pipeline import ConsistencyError
-
-    src = stream_snapshot_source(spark, src_dir, schema)
-    src_cols = list(src.columns)
-    enveloped = with_envelope(src, src_system_code,
-                              load_dttm=load_dttm or dt.datetime.now(),
-                              row_hash=row_hash)
-    names = tech_column_names(src_cols)
-    out = (
-        enveloped
-        .withColumn(names["row_hash_iceberg"],
-                    F.expr(row_hash_sql_expr(src.schema, src_cols)))
-        .withColumn("load_month", F.date_format(F.col(names["load_dttm"]), "yyyy-MM"))
-    )
-
-    reports: list[AuditReport] = []
-    q = (
-        out.writeStream
-        .foreachBatch(_audited_batch_sink(spark, target_dir, names, reports,
-                                          fail_on_consistency_error))
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return reports
-
-
-def _audited_batch_sink(spark: SparkSession, target_dir: str, names: dict,
-                        reports: list, fail_on_consistency_error: bool):
-    """The shared write-and-audit ``foreachBatch`` body: idempotent
-    batch_id-partitioned dynamic overwrite, then audit what actually LANDED
-    (re-read from the sink) before the epoch's offsets may commit."""
-    from flink_job_spark.operators.audit import AuditReport, hash_mismatch_flag
-    from flink_job_spark.pipeline import ConsistencyError
-
-    def write_and_audit(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.persist()
-        try:
-            # batch_id partition + dynamic overwrite: a REPLAYED batch (crash
-            # before offset commit, or the ConsistencyError path itself)
-            # overwrites its own partition instead of appending a duplicate
-            # copy per retry
-            (batch_df.withColumn("batch_id", F.lit(batch_id))
-                .write
-                .partitionBy("batch_id", "load_month")
-                .option("partitionOverwriteMode", "dynamic")
-                .mode("overwrite")
-                .parquet(target_dir))
-            n = batch_df.count()
-            # audit what actually LANDED: re-read the written partition so the
-            # count half of the gate is real (auditing the in-memory batch
-            # twice made delta == 0 by construction)
-            tgt = spark.read.parquet(target_dir).filter(
-                F.col("batch_id") == batch_id)
-            tn, mm = tgt.agg(
-                F.count(F.lit(1)),
-                F.coalesce(F.sum(hash_mismatch_flag(
-                    names["row_hash"], names["row_hash_iceberg"])), F.lit(0)),
-            ).first()
-            report = AuditReport(f"batch:{batch_id}", int(n), int(tn), int(mm))
-            reports.append(report)
-            if not report.ok and fail_on_consistency_error:
-                raise ConsistencyError(f"batch:{batch_id}", report)
-        finally:
-            batch_df.unpersist()
-
-    return write_and_audit
+    src = file_stream(spark, src_dir, schema, max_files_per_trigger)
+    return _ingest_audited(spark, src, target_dir, checkpoint_dir, src_system_code,
+                           load_dttm, fail_on_consistency_error, row_hash)
 
 
 def stream_paged_ingest_audited(
@@ -212,26 +104,64 @@ def stream_paged_ingest_audited(
         .option("fetch_size", fetch_size)
         .load()
     )
+    return _ingest_audited(spark, src, target_dir, checkpoint_dir, src_system_code,
+                           load_dttm, fail_on_consistency_error, row_hash)
+
+
+def _ingest_audited(spark: SparkSession, src: DataFrame, target_dir: str,
+                    checkpoint_dir: str, src_system_code: str,
+                    load_dttm: dt.datetime | None,
+                    fail_on_consistency_error: bool, row_hash) -> list[AuditReport]:
+    """Stamp envelope + sink-side hash + ``load_month`` onto ``src`` and
+    drain it through the audited sink; returns the per-batch ledger."""
     src_cols = list(src.columns)
-    enveloped = with_envelope(src, src_system_code,
-                              load_dttm=load_dttm or dt.datetime.now(),
-                              row_hash=row_hash)
     names = tech_column_names(src_cols)
     out = (
-        enveloped
+        with_envelope(src, src_system_code,
+                      load_dttm=load_dttm or dt.datetime.now(), row_hash=row_hash)
         .withColumn(names["row_hash_iceberg"],
                     F.expr(row_hash_sql_expr(src.schema, src_cols)))
         .withColumn("load_month",
                     F.date_format(F.col(names["load_dttm"]), "yyyy-MM"))
     )
-    reports: list = []
-    q = (
-        out.writeStream
-        .foreachBatch(_audited_batch_sink(spark, target_dir, names, reports,
-                                          fail_on_consistency_error))
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    reports: list[AuditReport] = []
+    drain(out, _audited_batch_sink(spark, target_dir, names, reports,
+                                   fail_on_consistency_error), checkpoint_dir)
     return reports
+
+
+def _audited_batch_sink(spark: SparkSession, target_dir: str, names: dict,
+                        reports: list, fail_on_consistency_error: bool):
+    """The shared write-and-audit ``foreachBatch`` body: idempotent
+    batch_id-partitioned dynamic overwrite, then audit what actually LANDED
+    (re-read from the sink) before the epoch's offsets may commit."""
+
+    def write_and_audit(batch_df: DataFrame, batch_id: int) -> None:
+        batch_df.persist()
+        try:
+            # batch_id partition + dynamic overwrite: a REPLAYED batch (crash
+            # before offset commit, or the ConsistencyError path itself)
+            # overwrites its own partition instead of appending a duplicate
+            # copy per retry
+            (batch_df.withColumn("batch_id", F.lit(batch_id))
+                .write
+                .partitionBy("batch_id", "load_month")
+                .option("partitionOverwriteMode", "dynamic")
+                .mode("overwrite")
+                .parquet(target_dir))
+            n = batch_df.count()
+            # audit what actually LANDED: re-read the written partition so the
+            # count half of the gate is real (auditing the in-memory batch
+            # twice made delta == 0 by construction)
+            tgt = spark.read.parquet(target_dir).filter(
+                F.col("batch_id") == batch_id)
+            report = run_consistency_check(
+                f"batch:{batch_id}", n, tgt,
+                h1=names["row_hash"], h2=names["row_hash_iceberg"])
+            reports.append(report)
+            if not report.ok and fail_on_consistency_error:
+                raise ConsistencyError(f"batch:{batch_id}", report)
+        finally:
+            batch_df.unpersist()
+
+    return write_and_audit

@@ -27,7 +27,7 @@ from pyspark.sql import types as T
 
 from flink_job_spark.functions.hashing import md5_u32
 from flink_job_spark.queries.sketch import KMV_K
-from flink_job_spark.streaming import with_file_cap
+from flink_job_spark.streaming import drain, file_stream
 from flink_job_spark.streaming.scd2 import latest_generation
 
 
@@ -84,17 +84,8 @@ def stream_kmv_sketches(
         merged.write.mode("overwrite").parquet(
             os.path.join(state_root, f"gen={batch_id}"))
 
-    q = (
-        with_file_cap(spark.readStream.schema(schema),
-                      max_files_per_trigger)
-        .parquet(src_dir)
-        .writeStream
-        .foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(file_stream(spark, src_dir, schema, max_files_per_trigger),
+          fold, checkpoint_dir)
 
 
 def kmv_estimates(spark: SparkSession, state_root: str) -> DataFrame:

@@ -30,7 +30,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from flink_job_spark.queries.sketch import HLL_LGK, iso_week_key
-from flink_job_spark.streaming import with_file_cap
+from flink_job_spark.streaming import drain, file_stream
 from flink_job_spark.streaming.scd2 import latest_generation
 
 
@@ -68,17 +68,8 @@ def stream_sketch_rollup(
         merged.write.mode("overwrite").parquet(
             os.path.join(state_root, f"gen={batch_id}"))
 
-    q = (
-        with_file_cap(spark.readStream.schema(schema),
-                      max_files_per_trigger)
-        .parquet(src_dir)
-        .writeStream
-        .foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(file_stream(spark, src_dir, schema, max_files_per_trigger),
+          fold, checkpoint_dir)
 
 
 def weekly_estimates(spark: SparkSession, state_root: str) -> DataFrame:

@@ -8,7 +8,7 @@ import datetime as dt
 from pyspark.sql import functions as F
 
 from flink_job_spark.sources.tables import load_table
-from flink_job_spark.streaming.ingest import stream_snapshot_ingest
+from flink_job_spark.streaming.ingest import stream_snapshot_ingest_audited
 from flink_job_spark.streaming.windows import (
     stream_dedup,
     stream_session_agg,
@@ -34,15 +34,18 @@ def test_stream_ingest_and_resume(spark, sf_dir, tmp_path):
     rest = li.filter(F.col("l_orderkey") > 700)
 
     first.write.mode("overwrite").parquet(src)
-    stream_snapshot_ingest(spark, src, first.schema, tgt, ckpt,
-                           load_dttm=dt.datetime(2026, 1, 1))
+    r1 = stream_snapshot_ingest_audited(spark, src, first.schema, tgt, ckpt,
+                                        load_dttm=dt.datetime(2026, 1, 1))
     t1 = spark.read.parquet(tgt)
     assert t1.count() == first.count()
+    assert r1 and all(r.ok for r in r1)
 
     # "new data arrives" → second availableNow run processes ONLY new files
     rest.write.mode("append").parquet(src)
-    stream_snapshot_ingest(spark, src, first.schema, tgt, ckpt,
-                           load_dttm=dt.datetime(2026, 1, 1))
+    r2 = stream_snapshot_ingest_audited(spark, src, first.schema, tgt, ckpt,
+                                        load_dttm=dt.datetime(2026, 1, 1))
+    assert r2 and all(r.ok for r in r2)
+    assert sum(r.source_count for r in r2) == rest.count()
     t2 = spark.read.parquet(tgt)
     assert t2.count() == li.count()  # no reprocessing, no loss
     # dual hashes agree on the streamed envelope too
@@ -53,8 +56,6 @@ def test_stream_ingest_and_resume(spark, sf_dir, tmp_path):
 def test_stream_audited_ingest_clean(spark, sf_dir, tmp_path):
     """foreachBatch audit: a clean stream writes + audits every micro-batch
     and the ledger shows zero mismatches."""
-    from flink_job_spark.streaming.ingest import stream_snapshot_ingest_audited
-
     src, tgt, ckpt = (str(tmp_path / p) for p in ("src", "tgt", "ckpt"))
     nat = load_table(spark, sf_dir, "nation")
     nat.write.mode("overwrite").parquet(src)
@@ -75,7 +76,6 @@ def test_stream_audited_ingest_catches_corruption(spark, sf_dir, tmp_path):
     from pyspark.sql.streaming import StreamingQueryException
 
     from flink_job_spark.functions.hashing import TOKEN_SEP, hash_token_column
-    from flink_job_spark.streaming.ingest import stream_snapshot_ingest_audited
 
     src = str(tmp_path / "src")
     nat = load_table(spark, sf_dir, "nation")
@@ -308,9 +308,10 @@ def test_stream_rate_limited_ingest_bounded_batches(spark, sf_dir, tmp_path):
     li = load_table(spark, sf_dir, "lineitem")
     li.repartition(8).write.mode("overwrite").parquet(src)
 
-    stream_snapshot_ingest(spark, src, li.schema, tgt, ckpt,
-                           load_dttm=dt.datetime(2026, 1, 1),
-                           max_files_per_trigger=2)
+    reports = stream_snapshot_ingest_audited(spark, src, li.schema, tgt, ckpt,
+                                             load_dttm=dt.datetime(2026, 1, 1),
+                                             max_files_per_trigger=2)
+    assert reports and all(r.ok for r in reports)
     got = spark.read.parquet(tgt)
     assert got.count() == li.count()
     assert got.filter(F.lower("row_hash") != F.lower("row_hash_iceberg")).count() == 0
@@ -642,7 +643,6 @@ def test_stream_audited_ingest_retry_does_not_duplicate(spark, sf_dir, tmp_path)
     from pyspark.sql.streaming import StreamingQueryException
 
     from flink_job_spark.functions.hashing import TOKEN_SEP, hash_token_column
-    from flink_job_spark.streaming.ingest import stream_snapshot_ingest_audited
 
     src, tgt, ckpt = (str(tmp_path / p) for p in ("src", "tgt", "ckpt"))
     nat = load_table(spark, sf_dir, "nation")
