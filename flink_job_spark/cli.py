@@ -20,8 +20,10 @@
                                         the reference reads JDBC only)
 
 With a ``jdbc:`` source the flow is the reference's: metadata scan →
-primary-key detection → frozen MAX watermark → pushed-down snapshot read
-(mis:202-250), then the same envelope/write/audit pipeline.
+primary-key detection → the snapshot facts from one source statement,
+``SELECT MAX(k), COUNT(k), MIN(k)`` (frozen cutoff, baseline count, lower
+partition bound) → pushed-down snapshot read (mis:202-250), then the same
+envelope/write/audit pipeline, which runs no Spark job for the facts.
 
 Order-key fallback mirrors the reference (explicit → detected key → first
 column, mis:231-242); for parquet stand-ins "detected key" is the
@@ -64,14 +66,15 @@ def detect_order_key(columns: list[str]) -> str:
 
 def _load_jdbc_table(spark, url, table, key_override, args, props):
     """The reference's per-table source flow (mis:202-250): metadata scan →
-    PK detect → freeze MAX watermark → pushed-down parallel snapshot read.
-    Returns (df, order_key, infos) or None if the access probe fails."""
+    PK detect → snapshot facts (MAX, COUNT, MIN of the key in one source
+    statement) → pushed-down parallel snapshot read. Returns
+    (df, order_key, infos, (cutoff, source_count)) or None if the access
+    probe fails."""
     from flink_job_spark.sources.jdbc import JdbcSnapshotSource
     from flink_job_spark.sources.metadata import (
         detect_primary_key,
-        read_key_bounds,
+        read_snapshot_facts,
         read_table_metadata,
-        read_watermark_value,
     )
 
     try:
@@ -87,21 +90,20 @@ def _load_jdbc_table(spark, url, table, key_override, args, props):
         key = (key_override
                or detect_primary_key(spark, url, table, props)
                or infos[0].name)  # explicit → PK → first column (mis:231-242)
-        cutoff = read_watermark_value(spark, url, table, key, properties=props)
+        cutoff, count, lower = read_snapshot_facts(spark, url, table, key,
+                                                   properties=props)
         bounds = None
-        if args.parallelism > 1:
-            b = read_key_bounds(spark, url, table, key, properties=props)
-            if b is not None and all(isinstance(x, (int, float)) for x in b):
-                bounds = (b[0], b[1])
+        if all(isinstance(x, (int, float)) for x in (lower, cutoff)):
+            bounds = (lower, cutoff)
         by_name = {c.name: c for c in infos}
         src = JdbcSnapshotSource(
             url, table, [c.name for c in infos], key, cutoff=cutoff,
             fetch_size=args.fetch_size, num_partitions=args.parallelism,
             bounds=bounds, properties=props, infos=by_name)
-        return src.reader(spark).load(), key, by_name
+        return src.reader(spark).load(), key, by_name, (cutoff, count)
     except Exception as e:
         # same skip-never-crash contract as the metadata scan above: a table
-        # dropped / permission revoked BETWEEN the scan and the watermark
+        # dropped / permission revoked BETWEEN the scan and the facts
         # read must not abort the remaining tables (mis:202-224)
         print(f"SKIP  {table}: source setup failed: {e}", file=sys.stderr)
         return None
@@ -169,8 +171,8 @@ def main(argv: list[str] | None = None) -> int:
             if loaded is None:
                 skipped += 1
                 continue
-            df, key, infos = loaded
-            jobs.append((df, src, f"{args.target_dir}/{dst}", key, infos))
+            df, key, infos, facts = loaded
+            jobs.append((df, src, f"{args.target_dir}/{dst}", key, infos, facts))
         else:
             # access probe: skip unreadable tables, never crash the batch (mis:494-525)
             if not check_table_access(spark, args.source_dir, src, args.source_format):

@@ -30,6 +30,19 @@ def freeze_cutoff(df: DataFrame, order_col: str) -> Any:
     return df.agg(F.max(order_col).alias("w")).first()["w"]
 
 
+def snapshot_facts(df: DataFrame, order_col: str) -> tuple[Any, int]:
+    """(cutoff, baseline count) in ONE Spark job: ``agg(max(k), count(k))``.
+
+    The source-side fact read for sources Spark reads directly (files, test
+    frames); live JDBC sources get the same pair from the source itself
+    (``sources.metadata.read_snapshot_facts``). ``count(k)`` is the count
+    under ``k <= max(k)`` (mis:1362-1383): both exclude NULL keys. An empty
+    frame gives ``(None, 0)``.
+    """
+    row = df.agg(F.max(order_col).alias("w"), F.count(order_col).alias("n")).first()
+    return row["w"], row["n"]
+
+
 def cutoff_predicate(order_col: str, cutoff: Any) -> Column:
     """``order_col <= cutoff``; empty table → contradiction (mis:645-657)."""
     if cutoff is None:

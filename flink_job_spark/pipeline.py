@@ -4,6 +4,12 @@ reference's per-table flow (mis:202-297) + post-load audit (mis:1264-1331).
 Per table:
 1. freeze cutoff MAX(order_col)                       (mis:628-643)
 2. baseline source COUNT under cutoff                 (mis:1362-1383)
+   Steps 1-2 are one read of the snapshot facts. A live JDBC source answers
+   them itself in one statement (``sources.metadata.read_snapshot_facts``,
+   called by the CLI) and passes them in as ``facts``: no Spark job runs
+   before the write. Sources Spark reads directly (files, test frames) get
+   both from one ``agg(max(k), count(k))`` job
+   (``operators.snapshot.snapshot_facts``).
 3. snapshot scan: explicit columns, cutoff predicate  (mis:1076-1088)
 4. stamp the 11-tech-column envelope; row_hash via the Column-expression
    implementation                                     (mis:1107-1119)
@@ -35,7 +41,12 @@ from flink_job_spark.operators.envelope import (
     tech_column_names,
     with_envelope,
 )
-from flink_job_spark.operators.snapshot import cutoff_predicate, freeze_cutoff, snapshot_scan
+from flink_job_spark.operators.snapshot import (
+    cutoff_predicate,
+    freeze_cutoff,  # noqa: F401 -- not called here; perfbench's traced run wraps it
+    snapshot_facts,
+    snapshot_scan,
+)
 from flink_job_spark.types import ColumnInfo, infos_from_schema, quote_identifier
 
 log = logging.getLogger(__name__)
@@ -140,11 +151,18 @@ def snapshot_ingest(
     order_col: str,
     config: IngestConfig | None = None,
     floor: Any = None,
+    *,
+    facts: tuple[Any, int] | None = None,
 ) -> IngestResult:
+    """Land one table and audit it. ``facts=(cutoff, source_count)`` are the
+    snapshot facts read at the source; without them they come from one
+    Spark job over ``source``. The audit compares ``source_count`` with the
+    count re-read from the target, so a scan that loses rows shows up as
+    ``delta != 0``."""
     cfg = config or IngestConfig()
     try:
-        cutoff = freeze_cutoff(source, order_col)
-        src_count = source.filter(cutoff_predicate(order_col, cutoff)).count()
+        cutoff, src_count = (facts if facts is not None
+                             else snapshot_facts(source, order_col))
 
         scan = snapshot_scan(source, list(source.columns), order_col, cutoff,
                              floor=floor, ordered=False)
@@ -232,14 +250,15 @@ def snapshot_ingest(
 
 def ingest_tables(
     spark: SparkSession,
-    tables: list[tuple],  # (df, name, target_path, order_col[, infos])
+    tables: list[tuple],  # (df, name, target_path, order_col[, infos[, facts]])
     config: IngestConfig | None = None,
 ) -> list[IngestResult]:
     """Load one batch of tables concurrently on the shared session, with
     per-table failure isolation and running totals (the reference's batch
     loop, mis:189-198, 299-359: one StatementSet per batch, run as one job).
-    A 5th tuple element carries per-table ColumnInfo metadata (live JDBC
-    sources).
+    A 5th tuple element carries per-table ColumnInfo metadata and a 6th the
+    source-read snapshot facts ``(cutoff, source_count)`` (live JDBC
+    sources; see ``snapshot_ingest``).
 
     Each table is a chain of small Spark jobs that alone leave most cores
     idle, so every table gets its own thread; Spark's scheduler interleaves
@@ -255,9 +274,10 @@ def ingest_tables(
     def ingest_one(item: tuple) -> IngestResult:
         df, name, path, key = item[:4]
         infos = item[4] if len(item) > 4 and item[4] else None
+        facts = item[5] if len(item) > 5 else None
         cfg = (dataclasses.replace(config or IngestConfig(), infos=infos)
                if infos else config)
-        return snapshot_ingest(spark, df, name, path, key, cfg)
+        return snapshot_ingest(spark, df, name, path, key, cfg, facts=facts)
 
     with ThreadPoolExecutor(max_workers=max(1, len(tables)),
                             thread_name_prefix="ingest") as pool:

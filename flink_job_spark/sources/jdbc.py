@@ -32,9 +32,19 @@ def quote_source_identifier(name: str, quote: str = '"') -> str:
 
 
 def render_sql_literal(value: Any, type_hint: str = "") -> str:
-    """Dialect-correct literal rendering for generated predicates (mis:659-689):
-    numbers bare, DATE/TIME/TIMESTAMP prefixed literals, strings quoted+escaped."""
+    """Lossless, driver-portable literal rendering for generated predicates
+    (mis:659-689): numbers and decimals bare, strings quoted+escaped, and
+    DATE/TIME/TIMESTAMP as JDBC escapes (``{d '…'}``, ``{t '…'}``,
+    ``{ts '…'}``), which every JDBC driver must translate to its dialect —
+    Derby rejects the ANSI ``TIMESTAMP '…'`` form.
+
+    Timestamps keep every microsecond: the reference's millisecond literal
+    (mis:676-680) puts a sub-ms cutoff BELOW the row that defines
+    ``MAX(k)``, so ``k <= cutoff`` drops that row from its own snapshot.
+    Decimals stay unquoted: a quoted decimal is a CHAR comparison that
+    Derby rejects."""
     import datetime as dt
+    from decimal import Decimal
 
     if value is None:
         return "NULL"
@@ -42,13 +52,14 @@ def render_sql_literal(value: Any, type_hint: str = "") -> str:
         return "TRUE" if value else "FALSE"
     if isinstance(value, (int, float)):
         return repr(value)
+    if isinstance(value, Decimal):
+        return format(value, "f")
     if isinstance(value, dt.datetime):
-        # millisecond precision like the reference (mis:676-680)
-        return "TIMESTAMP '" + value.strftime("%Y-%m-%d %H:%M:%S.") + f"{value.microsecond // 1000:03d}'"
+        return "{ts '" + value.strftime("%Y-%m-%d %H:%M:%S.%f") + "'}"
     if isinstance(value, dt.date):
-        return f"DATE '{value.isoformat()}'"
+        return "{d '" + value.isoformat() + "'}"
     if isinstance(value, dt.time):
-        return f"TIME '{value.strftime('%H:%M:%S')}'"
+        return "{t '" + value.isoformat() + "'}"
     s = str(value).replace("'", "''")
     return f"'{s}'"
 

@@ -5,7 +5,9 @@ directly over JDBC before building the Flink job (readTableMetadata
 mis:528-588, detectPrimaryKeyColumn mis:598-626, readWatermarkValue
 mis:628-650). The Spark-native twin runs the same java.sql calls through
 py4j on the driver: schema discovery is a driver-side concern (the result
-configures the distributed read; it is not row data).
+configures the distributed read; it is not row data). The snapshot facts
+(cutoff, baseline count, lower key bound) come from one statement,
+``read_snapshot_facts``.
 
 All helpers take an optional ``properties`` dict (user/password/encoding —
 the reference sets user, password, encoding, authPlugins, mis:533-537).
@@ -122,6 +124,30 @@ def _query_row(spark: SparkSession, url: str, sql: str,
         conn.close()
 
 
+def read_snapshot_facts(
+    spark: SparkSession,
+    url: str,
+    table: str,
+    order_col: str,
+    quote: str = '"',
+    properties: dict[str, str] | None = None,
+) -> tuple[Any, int, Any]:
+    """(cutoff, source_count, lower_bound) of one snapshot, from ONE source
+    statement: ``SELECT MAX(k), COUNT(k), MIN(k) FROM t``.
+
+    The reference reads the frozen watermark (mis:628-650) and the baseline
+    count under it (mis:1362-1383) as two queries, which can disagree under
+    concurrent inserts; one statement makes the three values consistent by
+    construction. ``COUNT(k)`` equals the count under ``k <= MAX(k)``: both
+    exclude NULL keys. An empty table gives ``(None, 0, None)``."""
+    q = lambda n: quote_source_identifier(n, quote)  # noqa: E731
+    k = q(order_col)
+    # an aggregate without GROUP BY always returns exactly one row
+    cutoff, count, lower = _query_row(
+        spark, url, f"SELECT MAX({k}), COUNT({k}), MIN({k}) FROM {q(table)}", properties)
+    return cutoff, int(count), lower
+
+
 def read_watermark_value(
     spark: SparkSession,
     url: str,
@@ -130,12 +156,9 @@ def read_watermark_value(
     quote: str = '"',
     properties: dict[str, str] | None = None,
 ) -> Any:
-    """Freeze the snapshot cutoff: SELECT MAX(order_col) at job start
-    (mis:628-650). Runs as one scalar query on the source."""
-    q = lambda n: quote_source_identifier(n, quote)  # noqa: E731
-    row = _query_row(spark, url, f"SELECT MAX({q(order_col)}) FROM {q(table)}",
-                     properties)
-    return None if row is None else row[0]
+    """The snapshot cutoff MAX(order_col) (mis:628-650): the first of
+    ``read_snapshot_facts``."""
+    return read_snapshot_facts(spark, url, table, order_col, quote, properties)[0]
 
 
 def read_key_bounds(
@@ -147,13 +170,10 @@ def read_key_bounds(
     properties: dict[str, str] | None = None,
 ) -> tuple[Any, Any] | None:
     """(MIN, MAX) of the order key — the partition bounds for the parallel
-    key-range read (the scalable successor of the reference's single cursor)."""
-    q = lambda n: quote_source_identifier(n, quote)  # noqa: E731
-    row = _query_row(spark, url, f"SELECT MIN({q(order_col)}), MAX({q(order_col)}) "
-                                 f"FROM {q(table)}", properties)
-    if row is None or row[0] is None or row[1] is None:
-        return None
-    return row
+    key-range read — projected from ``read_snapshot_facts``; None when the
+    table has no non-NULL key."""
+    cutoff, _, lower = read_snapshot_facts(spark, url, table, order_col, quote, properties)
+    return None if cutoff is None else (lower, cutoff)
 
 
 def _from_java(v: Any) -> Any:

@@ -66,6 +66,102 @@ def test_cli_jdbc_source_end_to_end(spark, sf_dir, tmp_path):
     assert out.select("ik").distinct().count() == 100
 
 
+def _derby_table(spark, url, ddl, rows):
+    """CREATE one Derby table and INSERT ``rows`` (SQL literal tuples)."""
+    jvm = spark.sparkContext._jvm
+    conn = jvm.java.sql.DriverManager.getConnection(url)
+    st = conn.createStatement()
+    st.executeUpdate(ddl)
+    table = ddl.split('"')[1]
+    for r in rows:
+        st.executeUpdate(f'INSERT INTO "{table}" VALUES ({", ".join(r)})')
+    st.close()
+    conn.close()
+
+
+def _status_lines(out: str) -> dict[str, str]:
+    """table → its result line (OK / INCONSISTENT) on the CLI's stdout."""
+    return {line.split()[1].rstrip(":"): line for line in out.splitlines()
+            if line.split()[:1] in (["OK"], ["INCONSISTENT"])}
+
+
+def test_cli_jdbc_microsecond_timestamp_and_decimal_keys(spark, tmp_path, capsys):
+    """Timestamp and decimal cutoffs render losslessly into the pushed-down
+    subquery: the µs row that defines MAX(k) lands, the audit (source-side
+    count vs re-read target) is OK, and the printed cutoff is the source
+    MAX. A millisecond literal dropped the max row; a quoted decimal or an
+    ANSI TIMESTAMP literal made Derby reject the read."""
+    url = "jdbc:derby:memory:fjs_cli_keys;create=true"
+    ts = ["2026-01-01 00:00:01.0", "2026-01-01 00:00:02.5",
+          "2026-01-01 00:00:05.123", "2026-01-01 00:00:05.123456"]
+    _derby_table(spark, url, 'CREATE TABLE "ts_keyed" ("k" TIMESTAMP NOT NULL, '
+                 '"v" VARCHAR(8), PRIMARY KEY ("k"))',
+                 [(f"TIMESTAMP('{t}')", f"'r{i}'") for i, t in enumerate(ts)])
+    _derby_table(spark, url, 'CREATE TABLE "dec_keyed" ("k" DECIMAL(12,4) NOT NULL, '
+                 '"v" VARCHAR(8), PRIMARY KEY ("k"))',
+                 [(d, f"'r{i}'") for i, d in enumerate(["0.5", "1.25", "7.0001"])])
+    tgt = str(tmp_path / "out")
+    rc = main(["--tables", "ts_keyed,dec_keyed", "--source-dir", url,
+               "--target-dir", tgt, "--mode", "replace", "--parallelism", "2"])
+    lines = _status_lines(capsys.readouterr().out)
+    assert rc == 0, lines
+    assert lines["ts_keyed"].startswith("OK    ts_keyed: read=4 written=4 delta=0")
+    assert lines["ts_keyed"].endswith("cutoff=2026-01-01 00:00:05.123456")
+    assert lines["dec_keyed"].startswith("OK    dec_keyed: read=3 written=3 delta=0")
+    assert lines["dec_keyed"].endswith("cutoff=7.0001")
+    assert spark.read.parquet(f"{tgt}/ts_keyed").count() == 4
+    assert spark.read.parquet(f"{tgt}/dec_keyed").count() == 3
+
+
+def test_cli_jdbc_empty_and_null_key_tables(spark, tmp_path, capsys):
+    """An empty table takes the `1 = 0` scan and audits OK at 0 rows. A
+    no-PK table keys on its first column; its NULL-key rows are outside
+    the snapshot — excluded from the source count and from the scan — and
+    the audit is OK."""
+    url = "jdbc:derby:memory:fjs_cli_edge;create=true"
+    _derby_table(spark, url, 'CREATE TABLE "empty_t" ("k" BIGINT NOT NULL, '
+                 '"v" VARCHAR(8), PRIMARY KEY ("k"))', [])
+    _derby_table(spark, url, 'CREATE TABLE "nullkey_t" ("nk" INT, "v" VARCHAR(8))',
+                 [("1", "'a'"), ("NULL", "'b'"), ("3", "'c'"), ("NULL", "'d'"),
+                  ("2", "'e'")])
+    tgt = str(tmp_path / "out")
+    rc = main(["--tables", "empty_t,nullkey_t", "--source-dir", url,
+               "--target-dir", tgt, "--mode", "replace", "--parallelism", "2"])
+    lines = _status_lines(capsys.readouterr().out)
+    assert rc == 0, lines
+    assert lines["empty_t"].startswith("OK    empty_t: read=0 written=0 delta=0")
+    assert lines["empty_t"].endswith("cutoff=None")
+    assert lines["nullkey_t"].startswith("OK    nullkey_t: read=3 written=3 delta=0")
+    got = spark.read.parquet(f"{tgt}/nullkey_t")
+    assert sorted(r["nk"] for r in got.collect()) == [1, 2, 3]
+
+
+def test_cli_jdbc_three_source_round_trips_per_table(spark, tmp_path, monkeypatch):
+    """Per JDBC table the CLI opens three source connections at
+    --parallelism > 1: the metadata scan, PK detection and the one
+    snapshot-facts statement (cutoff, count and lower bound together)."""
+    from flink_job_spark.sources import metadata
+
+    url = "jdbc:derby:memory:fjs_cli_trips;create=true"
+    for name in ("trip_a", "trip_b"):
+        _derby_table(spark, url, f'CREATE TABLE "{name}" ("k" BIGINT NOT NULL, '
+                     '"v" VARCHAR(8), PRIMARY KEY ("k"))',
+                     [(str(i), f"'v{i}'") for i in range(1, 6)])
+    calls = []
+    real = metadata._connect
+
+    def counting(*a, **kw):
+        calls.append(a[1])
+        return real(*a, **kw)
+
+    monkeypatch.setattr(metadata, "_connect", counting)
+    rc = main(["--tables", "trip_a,trip_b", "--source-dir", url,
+               "--target-dir", str(tmp_path / "out"), "--mode", "replace",
+               "--parallelism", "3"])
+    assert rc == 0
+    assert len(calls) == 3 * 2
+
+
 def test_cli_fail_on_consistency_error_aborts(spark, sf_dir, tmp_path, capsys):
     """--fail-on-consistency-error aborts the job with rc=2 (mis:365-368):
     a second append under the same cutoff doubles the audited target count."""

@@ -1,5 +1,6 @@
 """Live DatabaseMetaData scan against embedded Derby (mis:528-650):
-column metadata, BLOB skip, primary-key detection, frozen watermark, bounds."""
+column metadata, BLOB skip, primary-key detection, snapshot facts (frozen
+watermark, baseline count, bounds)."""
 
 from __future__ import annotations
 
@@ -9,9 +10,11 @@ from decimal import Decimal
 import pytest
 from pyspark.sql import types as T
 
+from flink_job_spark.operators.snapshot import cutoff_predicate
 from flink_job_spark.sources.metadata import (
     detect_primary_key,
     read_key_bounds,
+    read_snapshot_facts,
     read_table_metadata,
     read_watermark_value,
 )
@@ -80,3 +83,32 @@ def test_read_watermark_and_bounds(spark, derby_meta):
     assert amt == Decimal("5.25")
     d = read_watermark_value(spark, URL, "t_meta", "born")
     assert d == dt.date(2026, 1, 5)
+
+
+@pytest.mark.parametrize("key", ["id", "changed", "amount", "born"])
+def test_snapshot_facts_match_separate_reads(spark, derby_meta, key):
+    """One statement gives what the separate reads give: the cutoff of
+    read_watermark_value, the Spark count under that cutoff, and the lower
+    bound of read_key_bounds — for integer, timestamp, decimal and date
+    keys (temporal/decimal values through _from_java)."""
+    cutoff, count, lower = read_snapshot_facts(spark, URL, "t_meta", key)
+    assert cutoff == read_watermark_value(spark, URL, "t_meta", key)
+    assert lower == read_key_bounds(spark, URL, "t_meta", key)[0]
+    scan = spark.read.jdbc(URL, '"t_meta"').select(key)
+    assert count == scan.filter(cutoff_predicate(key, cutoff)).count() == 5
+
+
+def test_snapshot_facts_empty_and_null_keys(spark, derby_meta):
+    """An empty table has no cutoff, count 0 and no bounds; NULL keys are
+    outside the snapshot, so COUNT(k) skips them like `k <= cutoff` does."""
+    jvm = spark.sparkContext._jvm
+    conn = jvm.java.sql.DriverManager.getConnection(URL)
+    st = conn.createStatement()
+    st.executeUpdate('CREATE TABLE "t_empty" ("k" BIGINT)')
+    st.executeUpdate('CREATE TABLE "t_nullk" ("k" BIGINT)')
+    st.executeUpdate('INSERT INTO "t_nullk" VALUES (NULL), (4), (NULL), (9)')
+    st.close()
+    conn.close()
+    assert read_snapshot_facts(spark, URL, "t_empty", "k") == (None, 0, None)
+    assert read_key_bounds(spark, URL, "t_empty", "k") is None
+    assert read_snapshot_facts(spark, URL, "t_nullk", "k") == (9, 2, 4)

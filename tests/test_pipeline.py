@@ -60,6 +60,84 @@ def test_empty_table_contradiction_cutoff(spark, sf_dir, tmp_path):
     assert res.report is not None and res.report.source_count == 0
 
 
+def test_snapshot_facts_one_agg_equals_cutoff_and_count(spark):
+    """File sources' facts: one agg gives MAX(k) and the count under it;
+    NULL keys are in neither; an empty frame gives (None, 0)."""
+    from flink_job_spark.operators.snapshot import freeze_cutoff, snapshot_facts
+
+    df = spark.createDataFrame([(3, "a"), (None, "b"), (7, "c"), (None, "d"), (5, "e")],
+                               "k long, v string")
+    cutoff = freeze_cutoff(df, "k")
+    assert snapshot_facts(df, "k") == (
+        cutoff, df.filter(cutoff_predicate("k", cutoff)).count()) == (7, 3)
+    assert snapshot_facts(df.filter(F.lit(False)), "k") == (None, 0)
+
+
+def _jobs_in_group(spark, group, run) -> int:
+    spark.sparkContext.setJobGroup(group, group)
+    try:
+        run()
+    finally:
+        spark.sparkContext.setLocalProperty("spark.jobGroup.id", None)
+    return len(spark.sparkContext.statusTracker().getJobIdsForGroup(group))
+
+
+def _jobs_before_write(spark, monkeypatch, group, run) -> int:
+    """Spark jobs ``run`` launches before ``snapshot_ingest`` builds the
+    envelope — i.e. before its scan and write."""
+    from flink_job_spark import pipeline
+
+    seen = []
+    real = pipeline.with_envelope
+
+    def probe(*a, **kw):
+        seen.append(len(spark.sparkContext.statusTracker().getJobIdsForGroup(group)))
+        return real(*a, **kw)
+
+    monkeypatch.setattr(pipeline, "with_envelope", probe)
+    _jobs_in_group(spark, group, run)
+    return seen[0]
+
+
+def test_snapshot_ingest_fact_jobs(spark, sf_dir, tmp_path, monkeypatch):
+    """Given source-read facts, no Spark job runs before the write; without
+    them the facts cost the jobs of ONE aggregation (MAX and COUNT in one
+    agg), not the two of a MAX job plus a COUNT job."""
+    from flink_job_spark.operators.snapshot import freeze_cutoff
+
+    nation = load_table(spark, sf_dir, "nation")
+    cfg = IngestConfig(mode="replace", load_dttm=dt.datetime(2026, 1, 1))
+    facts = (24, 25)
+    res = {}
+
+    def ingest(name, **kw):
+        res[name] = snapshot_ingest(spark, nation, name, str(tmp_path / name),
+                                    "n_nationkey", cfg, **kw)
+
+    one_agg = _jobs_in_group(spark, "one-agg", lambda: freeze_cutoff(nation, "n_nationkey"))
+    assert one_agg >= 1
+    assert _jobs_before_write(spark, monkeypatch, "given",
+                              lambda: ingest("given", facts=facts)) == 0
+    assert _jobs_before_write(spark, monkeypatch, "derived",
+                              lambda: ingest("derived")) == one_agg
+    assert (res["given"].cutoff, res["given"].report.source_count) == facts
+    assert (res["derived"].cutoff, res["derived"].report.source_count) == facts
+    assert res["given"].ok and res["derived"].ok
+
+
+def test_audit_uses_the_source_count(spark, sf_dir, tmp_path):
+    """The baseline count is the source's, not re-derived from what was
+    scanned or written: one row more at the source than landed is delta -1."""
+    nation = load_table(spark, sf_dir, "nation")
+    n = nation.count()
+    res = snapshot_ingest(spark, nation, "nation", str(tmp_path / "n"), "n_nationkey",
+                          IngestConfig(mode="replace", load_dttm=dt.datetime(2026, 1, 1)),
+                          facts=(24, n + 1))
+    assert res.report.target_count == n
+    assert res.report.delta == -1 and res.report.hash_mismatches == 0
+    assert not res.ok
+
+
 def test_fail_on_consistency_error_aborts(spark, sf_dir, tmp_path):
     """With the flag set, a failed audit raises ConsistencyError through the
     per-table isolation (the reference rethrows ConsistencyCheckException
